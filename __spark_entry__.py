@@ -20,6 +20,7 @@ if _REPO not in sys.path:
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from real_estate_project1_etl_spark.functions.columns import bind, md5_60
 from real_estate_project1_etl_spark.functions.numeric import guarded_ratio_int
 from real_estate_project1_etl_spark.functions.text import (
     _DIACRITICS_DST,
@@ -1867,16 +1868,13 @@ def q_minhash_near_dup(spark, sf_dir):
     # round-4 verdict item 7: the candidate-volume knob defaults on) — the
     # oracle mirrors the entire LSH construction via the same tuner, so
     # this checks candidate generation too, not just the verified pair
-    # set.  hash_fn='md5_60' makes the shingle hash engine-reproducible;
-    # round_digits=None emits the raw int/int Jaccard division
-    # (bit-identical across engines).
+    # set.  The md5_60 shingle hash is engine-reproducible, and the
+    # Jaccard is the raw int/int division (bit-identical across engines).
     return minhash_near_duplicates(
         _t(spark, sf_dir, "documents"),
         "text",
         "doc_id",
         jaccard_threshold=0.4,
-        round_digits=None,
-        hash_fn="md5_60",
     )
 
 
@@ -1911,14 +1909,14 @@ def q_incremental_dedup_docs(spark, sf_dir):
     # persist both signature tables: banding + the two candidate-verify
     # joins each re-reference them (the steady state reads base from the
     # materialized bucketed table instead — save_minhash_signatures)
-    base_sig = minhash_signature_table(
-        base, "text", "doc_id", hash_fn="md5_60"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    new_sig = minhash_signature_table(
-        new, "text", "doc_id", hash_fn="md5_60"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    base_sig = minhash_signature_table(base, "text", "doc_id").persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    new_sig = minhash_signature_table(new, "text", "doc_id").persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     out = incremental_minhash_pairs(
-        new_sig, base_sig, jaccard_threshold=0.4, round_digits=None
+        new_sig, base_sig, jaccard_threshold=0.4
     ).localCheckpoint(eager=True)
     base_sig.unpersist()
     new_sig.unpersist()
@@ -1950,13 +1948,13 @@ def q_incremental_dedup_docs(spark, sf_dir):
     """,
 )
 def q_simhash_near_dup(spark, sf_dir):
-    # hash_fn='md5_60' makes the shingle hash engine-reproducible (the
-    # oracle recomputes the same 60-bit simhash via per-bit votes), and
+    # the md5_60 shingle hash is engine-reproducible (the oracle
+    # recomputes the same 60-bit simhash via per-bit votes), and
     # max_hamming=3 is the 4x16-bit pigeonhole bound — recall is exactly 1,
     # so output == exact all-pairs hamming<=3 set.
     return simhash_near_duplicates(
         _t(spark, sf_dir, "documents"), "text", "doc_id",
-        max_hamming=3, hash_fn="md5_60",
+        max_hamming=3,
     )
 
 
@@ -5146,9 +5144,7 @@ def q_near_dup_components(spark, sf_dir):
     )
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_near_duplicates(
-        docs, "text", "doc_id", round_digits=None, hash_fn="md5_60"
-    )
+    pairs = minhash_near_duplicates(docs, "text", "doc_id")
     labels = connected_components(pairs, "id_a", "id_b", max_iter=10)
     return component_sizes(labels)
 
@@ -5190,9 +5186,7 @@ def q_soft_dedup_weights(spark, sf_dir):
     )
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_near_duplicates(
-        docs, "text", "doc_id", round_digits=None, hash_fn="md5_60"
-    )
+    pairs = minhash_near_duplicates(docs, "text", "doc_id")
     return soft_dedup_weights(docs, pairs)
 
 
@@ -5234,9 +5228,7 @@ def q_leakage_safe_split(spark, sf_dir):
     from real_estate_project1_etl_spark.operators.graph import connected_components
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_near_duplicates(
-        docs, "text", "doc_id", round_digits=None, hash_fn="md5_60"
-    )
+    pairs = minhash_near_duplicates(docs, "text", "doc_id")
     labels = connected_components(pairs, "id_a", "id_b", max_iter=10)
     bucket = (
         F.conv(F.substring(F.md5(F.col("comp").cast("string")), 1, 2), 16, 10)
@@ -5401,9 +5393,7 @@ def q_near_dup_canonical_map(spark, sf_dir):
     )
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_near_duplicates(
-        docs, "text", "doc_id", round_digits=None, hash_fn="md5_60"
-    )
+    pairs = minhash_near_duplicates(docs, "text", "doc_id")
     labels = connected_components(pairs, "id_a", "id_b", max_iter=10).select(
         F.col("id").alias("doc_id"), F.col("comp")
     )
@@ -8933,10 +8923,8 @@ def q_documents_corpus_build_v3(spark, sf_dir):
     s0 = dom.filter(F.col("domain").isNotNull()).join(
         F.broadcast(block), "domain", "left_anti"
     )
-    from real_estate_project1_etl_spark.operators.dedup import _bind
-
     # token array bound once per row: the unbound lambda re-evaluated the
-    # normalize/split chain per 3-word line (see dedup._bind, round 14)
+    # normalize/split chain per 3-word line (see functions.columns.bind)
     ts = F.split(F.lower(collapse_whitespace(F.col("text"))), " ")
 
     def _lines(tt):
@@ -8949,7 +8937,7 @@ def q_documents_corpus_build_v3(spark, sf_dir):
             ),
         ).otherwise(F.array().cast("array<string>"))
 
-    lines = _bind(ts, _lines)
+    lines = bind(ts, _lines)
     layout = s0.select("doc_id", F.array_join(lines, "\n").alias("text"))
     cleaned = remove_frequent_lines(layout, min_df=3).join(
         s0.select("doc_id", "source"), "doc_id"
@@ -10958,9 +10946,7 @@ def q_quality_canonical_docs(spark, sf_dir):
     )
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_near_duplicates(
-        docs, "text", "doc_id", round_digits=None, hash_fn="md5_60"
-    )
+    pairs = minhash_near_duplicates(docs, "text", "doc_id")
     labels = connected_components(pairs, "id_a", "id_b", max_iter=10)
     return canonical_by_quality(docs, labels, "n_chars")
 
@@ -11017,10 +11003,8 @@ def q_boilerplate_line_removal(spark, sf_dir):
     )
 
     docs = _t(spark, sf_dir, "documents")
-    from real_estate_project1_etl_spark.operators.dedup import _bind
-
     # token array bound once per row: the unbound lambda re-evaluated the
-    # normalize/split chain per 3-word line (see dedup._bind, round 14)
+    # normalize/split chain per 3-word line (see functions.columns.bind)
     ts = F.split(F.lower(collapse_whitespace(F.col("text"))), " ")
 
     def _lines(tt):
@@ -11033,7 +11017,7 @@ def q_boilerplate_line_removal(spark, sf_dir):
             ),
         ).otherwise(F.array().cast("array<string>"))
 
-    lines = _bind(ts, _lines)
+    lines = bind(ts, _lines)
     layout = docs.select(
         "doc_id", F.array_join(lines, "\n").alias("text")
     )
@@ -11279,8 +11263,6 @@ def q_dedup_candidate_recall(spark, sf_dir):
         "text",
         "doc_id",
         jaccard_threshold=0.6,
-        round_digits=None,
-        hash_fn="md5_60",
     )
     return pair_set_recall(exact, cand)
 
@@ -11873,9 +11855,7 @@ def q_unimax_sampled_corpus(spark, sf_dir):
         sizes, "lang", "n_chars", (int(total) * 4) // 5, max_epochs=1,
         budget_col="budget_chars",
     ).select("lang", F.col("epochs_ppm").alias("sample_rate_ppm"))
-    h60 = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10
-    ).cast("long")
+    h60 = md5_60("doc_id")
     kept = (
         docs.join(F.broadcast(rates), "lang")
         .filter(
@@ -12504,21 +12484,14 @@ def q_leakage_free_split_audit(spark, sf_dir):
     )
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_near_duplicates(
-        docs, "text", "doc_id", round_digits=None, hash_fn="md5_60"
-    )
+    pairs = minhash_near_duplicates(docs, "text", "doc_id")
     labels = connected_components(pairs, "id_a", "id_b", max_iter=10)
     ids = docs.select("doc_id")
     atomic = component_atomic_split(ids, labels, _SPLIT_TEST_T)
     naive = ids.select(
         "doc_id",
         F.when(
-            F.conv(
-                F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15),
-                16,
-                10,
-            ).cast("long")
-            < F.lit(_SPLIT_TEST_T),
+            md5_60("doc_id") < F.lit(_SPLIT_TEST_T),
             F.lit("test"),
         )
         .otherwise(F.lit("train"))

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .columns import bind
+
 # tracking params dropped during canonicalization (prefix-match utm_*)
 _TRACKING_RX = r"^(utm_|fbclid|gclid)"
 
@@ -139,20 +141,6 @@ def _pct_guarded(s: Column) -> Column:
     return F.when(s.contains("%"), normalize_percent_encoding(s)).otherwise(s)
 
 
-def _let(value: Column, body) -> Column:
-    """Single-use let-binding at the expression level: evaluate ``value``
-    ONCE per row and feed it to ``body`` as a bound variable, via a
-    1-element ``transform``.  Catalyst's CollapseProject re-inlines
-    aliased sub-expressions into every use site, so a composed column
-    function that references one component N times evaluates it N times —
-    for :func:`canonicalize_url` that multiplied the (HOF-bearing, already
-    codegen-fallback) percent-normalize tree ~10x per row and made the
-    round-6 host normalization a 2.4x wall-time regression.  Binding the
-    shared components through a lambda variable keeps the printed plan and
-    the per-row work linear in the number of components."""
-    return F.element_at(F.transform(F.array(value), body), 1)
-
-
 def canonicalize_url(url: Column | str) -> Column:
     """Canonical URL: lower-cased scheme+host, default port stripped
     (``:80`` http / ``:443`` https), duplicate slashes collapsed and
@@ -177,7 +165,7 @@ def canonicalize_url(url: Column | str) -> Column:
 
     Shape: the input and every shared component (scheme, normalized
     host, path, query, protocol-relative path) bind ONCE through
-    :func:`_let` struct bindings — without them each component re-expands
+    :func:`~.columns.bind` struct bindings — without them each component re-expands
     at every use site (Catalyst re-inlines through CollapseProject) and
     the per-row cost goes superlinear in composition depth."""
 
@@ -256,9 +244,9 @@ def canonicalize_url(url: Column | str) -> Column:
                 .otherwise(u)
             )
 
-        return _let(parts, assemble)
+        return bind(parts, assemble)
 
-    return _let(_c(url), build)
+    return bind(_c(url), build)
 
 
 def canonicalize_urls(df, url_col: str, out_col: str = "canon_url"):

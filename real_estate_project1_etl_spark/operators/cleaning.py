@@ -30,7 +30,7 @@ from ..functions.text import (
     nbsp_to_space,
     strip_diacritics,
 )
-from ..schemas import CZECH_REGIONS
+from ..schemas import CZECH_REGIONS, PROPERTIES_RAW
 
 #: rent/sale purpose keyword lists, transcribed verbatim from the reference
 #: (transform.py:44-60; the reference re-declares the same lists mid-function
@@ -102,8 +102,12 @@ def clean_properties(
     ``file_name_col`` defaults to the scan's file metadata (the reference
     back-computes it from the S3 key, transform.py:112); ``dump_ts`` defaults
     to ``current_timestamp()`` — inject a literal for deterministic tests.
+
+    ``dedup_order`` is the first-wins tiebreak among rows sharing a
+    ``link``; it defaults to every bronze column, then ``file_name``, so
+    the surviving duplicate does not depend on the order rows arrive in.
     """
-    dedup_order = dedup_order or ["link"]
+    dedup_order = dedup_order or [*PROPERTIES_RAW.fieldNames(), "file_name"]
     rent_rx = "|".join(RENT_KEYWORDS)
     sale_rx = "|".join(SALE_KEYWORDS)
 

@@ -34,6 +34,7 @@ import re
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from real_estate_project1_etl_spark.functions.columns import bind, md5_60
 from real_estate_project1_etl_spark.functions.text import collapse_whitespace
 
 
@@ -262,13 +263,13 @@ def heavy_hitter_ngrams(
     top-k sketch guarantees; raise ``capacity`` to push the exact
     frontier out.
     """
-    from .dedup import _bind, word_ngrams
+    from .dedup import word_ngrams
 
     w = F.split(F.lower(collapse_whitespace(F.col(text_col))), " ")
     # split bound once per row; when size >= n every window is full, so
     # word_ngrams' gram list equals the historical transform(sequence)
     # construction exactly (which re-evaluated the split per gram)
-    grams = _bind(
+    grams = bind(
         w,
         lambda ww: F.when(F.size(ww) >= n, word_ngrams(ww, n)).otherwise(
             F.expr("cast(array() as array<string>)")
@@ -316,13 +317,11 @@ def bigram_coverage(
     37.6 s -> see SCALE.md.  Returns (doc_id, n_bigrams, n_covered,
     coverage).
     """
-    from .dedup import _bind
-
     w = F.split(F.lower(collapse_whitespace(F.col(text_col))), " ")
     # token-hash array bound once per row (round 14): the unbound form
     # referenced it twice (two shifted slices), re-running the per-token
     # xxhash pass per reference in the interpreted evaluator
-    keys = _bind(
+    keys = bind(
         F.transform(w, lambda x: F.xxhash64(x)),
         lambda hs: F.zip_with(
             F.slice(hs, 1, F.greatest(F.size(hs) - 1, F.lit(0))),
@@ -372,11 +371,7 @@ def line_document_frequency(
     aggregation exactly like token df.
     """
     lines = F.split(F.col(text_col), re.escape(delim), -1)
-    hashes = F.array_distinct(
-        F.transform(
-            lines, lambda l: F.conv(F.substring(F.md5(l), 1, 15), 16, 10).cast("long")
-        )
-    )
+    hashes = F.array_distinct(F.transform(lines, md5_60))
     return (
         docs.select(F.explode(hashes).alias("line_hash"))
         .groupBy("line_hash")
@@ -389,7 +384,6 @@ def remove_frequent_lines(
     min_df: int = 3,
     text_col: str = "text",
     delim: str = "\n",
-    strategy: str = "inline",
 ) -> DataFrame:
     """Line-level boilerplate removal (the CCNet/RefinedWeb curation
     step): drop every line whose exact text appears in >= ``min_df``
@@ -401,73 +395,35 @@ def remove_frequent_lines(
     document (a document whose every line is boilerplate keeps a row
     with empty text — the downstream length gate decides its fate).
 
-    Two physical strategies, same result:
-
-    * ``"inline"`` (default): the frequent-line set — by construction the
-      Zipf HEAD of the line distribution, so small at any corpus size —
-      is collapsed to ONE row (``collect_set`` of 60-bit hashes) and
-      broadcast-crossJoined back; each document filters its own lines
-      with an in-row higher-order function. The corpus text never
-      shuffles: one digest-only df aggregation, then a scan-stage
-      rewrite. This is the 100 TB shape.
-    * ``"join"``: posexplode lines, broadcast LEFT ANTI against the
-      frequent set, reassemble per doc (struct-sort, one doc_id
-      exchange). Escape hatch for a degenerate corpus whose frequent set
-      outgrows a single in-row array (hundreds of thousands of distinct
-      boilerplate lines).
+    The frequent-line set — by construction the Zipf HEAD of the line
+    distribution, so small at any corpus size — is collapsed to ONE row
+    (``collect_set`` of 60-bit hashes) and broadcast-crossJoined back;
+    each document filters its own lines with an in-row higher-order
+    function. The corpus text never shuffles: one digest-only df
+    aggregation, then a scan-stage rewrite. This is the 100 TB shape.
     """
-    if strategy not in ("inline", "join"):
-        raise ValueError(f"remove_frequent_lines: unknown strategy {strategy!r}")
-    h60 = lambda c: F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")  # noqa: E731
     freq = line_document_frequency(docs, text_col, delim).filter(
         F.col("df") >= min_df
     )
     lines = F.split(F.col(text_col), re.escape(delim), -1)
-    if strategy == "inline":
-        stop = freq.agg(F.collect_set("line_hash").alias("_stop"))
-        kept = F.filter(
-            lines, lambda l: ~F.array_contains(F.col("_stop"), h60(l))
-        )
-        base = docs.crossJoin(F.broadcast(stop))
-        # materialize the filtered array ONCE per row (a flat select would
-        # re-run the per-line hash+membership fold for each of the three
-        # output expressions — measured 2x wall at 4M lines)
-        once = base.select(
-            "doc_id",
-            kept.alias("_kept"),
-            F.size(lines).cast("bigint").alias("_n"),
-        )
-        return once.select(
-            "doc_id",
-            F.concat_ws(delim, "_kept").alias("clean_text"),
-            F.size("_kept").cast("bigint").alias("n_kept"),
-            (F.col("_n") - F.size("_kept")).cast("bigint").alias("n_removed"),
-        )
-    pos = docs.select(
-        "doc_id", F.posexplode(lines).alias("pos", "line")
-    ).withColumn("line_hash", h60(F.col("line")))
-    surv = pos.join(F.broadcast(freq.select("line_hash")), "line_hash", "left_anti")
-    per_doc = surv.groupBy("doc_id").agg(
-        F.concat_ws(
-            delim,
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "line"))),
-                lambda s: s["line"],
-            ),
-        ).alias("clean_text"),
-        F.count(F.lit(1)).alias("n_kept"),
+    stop = freq.agg(F.collect_set("line_hash").alias("_stop"))
+    kept = F.filter(
+        lines, lambda l: ~F.array_contains(F.col("_stop"), md5_60(l))
     )
-    n_lines = docs.select("doc_id", F.size(lines).cast("bigint").alias("_n"))
-    return (
-        n_lines.join(per_doc, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("clean_text", F.lit("")).alias("clean_text"),
-            F.coalesce("n_kept", F.lit(0)).cast("bigint").alias("n_kept"),
-            (F.col("_n") - F.coalesce("n_kept", F.lit(0))).cast("bigint").alias(
-                "n_removed"
-            ),
-        )
+    base = docs.crossJoin(F.broadcast(stop))
+    # materialize the filtered array ONCE per row (a flat select would
+    # re-run the per-line hash+membership fold for each of the three
+    # output expressions — measured 2x wall at 4M lines)
+    once = base.select(
+        "doc_id",
+        kept.alias("_kept"),
+        F.size(lines).cast("bigint").alias("_n"),
+    )
+    return once.select(
+        "doc_id",
+        F.concat_ws(delim, "_kept").alias("clean_text"),
+        F.size("_kept").cast("bigint").alias("n_kept"),
+        (F.col("_n") - F.size("_kept")).cast("bigint").alias("n_removed"),
     )
 
 
@@ -561,8 +517,6 @@ def bigram_lm_scores(
     """
     from .util import ensure_parallelism
 
-    from ..operators.dedup import _bind
-
     ws = F.split(F.lower(collapse_whitespace(F.col(text_col))), " ")
     # bigram build as arrays_zip of two shifted slices — a PLAIN
     # expression that stays in codegen, measured 4.4x the throughput of
@@ -572,7 +526,7 @@ def bigram_lm_scores(
     # The word array is BOUND once (round 14): the un-bound form
     # references ws three times (size + two slices) and the interpreted
     # evaluator re-runs the lower/collapse/split chain per reference.
-    big = _bind(
+    big = bind(
         ws,
         lambda w: F.arrays_zip(
             F.slice(w, 1, F.greatest(F.size(w) - 1, F.lit(0))).alias("w1"),
@@ -724,13 +678,11 @@ def trigram_lm_scores(
             "trigram_lm_scores: min_count3/min_count2 must be >= 1, got "
             f"{min_count3!r}/{min_count2!r}"
         )
-    from ..operators.dedup import _bind
-
     ws = F.split(F.lower(collapse_whitespace(F.col(text_col))), " ")
     # word arrays bound once (round 14): the un-bound zips reference ws
     # 4x / 3x and the interpreted evaluator re-runs the normalize/split
-    # chain per reference — see dedup._bind
-    tri = _bind(
+    # chain per reference — see functions.columns.bind
+    tri = bind(
         ws,
         lambda w: F.arrays_zip(
             F.slice(w, 1, F.greatest(F.size(w) - 2, F.lit(0))).alias("w1"),
@@ -738,7 +690,7 @@ def trigram_lm_scores(
             F.slice(w, 3, F.greatest(F.size(w) - 2, F.lit(0))).alias("w3"),
         ),
     )
-    big = _bind(
+    big = bind(
         ws,
         lambda w: F.arrays_zip(
             F.slice(w, 1, F.greatest(F.size(w) - 1, F.lit(0))).alias("b1"),

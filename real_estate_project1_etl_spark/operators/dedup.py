@@ -11,7 +11,8 @@ pipeline:
            on (band, signature-slice). Candidate pairs only ever meet inside
            a bucket, so the join is equi (shuffle on bucket key), never a
            cross product. Classic MinHash/LSH construction (Broder '97) on
-           native expressions: xxhash64 with per-seed salts.
+           native expressions: one md5_60 hash per shingle, then k
+           universal-hash permutations.
 - simhash: 64-bit weighted-bit fingerprint; near-dups differ in few bits.
            Banded into 4x16-bit chunks for candidate generation (any
            Hamming-distance<=3 pair shares at least one chunk).
@@ -24,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.columns import bind, md5_60
 from ..functions.text import collapse_whitespace
 from .util import ensure_parallelism
 
@@ -48,38 +50,24 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return df.join(digests, id_col, "left_semi")
 
 
-def _bind(value: Column, fn) -> Column:
-    """Evaluate ``value`` ONCE per row and hand it to ``fn`` as a bound
-    lambda variable.
-
-    Interpreted higher-order functions re-evaluate any OUTER expression
-    their lambda references once per array element — a lambda like
-    ``i -> concat_ws(' ', slice(w, i, n))`` re-runs the whole
-    lower/collapse/split chain that produces ``w`` for every gram,
-    turning an O(words) projection into O(words^2) per document
-    (measured: the minhash signature build over sf0.1 documents dropped
-    3.7 -> 0.6 s when the re-evaluation was removed; the winnowing
-    chain, which stacked two such lambdas, dropped ~50x).  Lambda
-    VARIABLES, by contrast, are evaluated values — so wrapping the
-    expensive expression in a single-element array and binding it via
-    ``transform`` makes the inner lambda reference a value, with
-    construction semantics otherwise IDENTICAL to the unbound form.
-    """
-    return F.element_at(F.transform(F.array(value), fn), 1)
-
-
 def word_ngrams(words: Column, n: int) -> Column:
     """Positional word n-grams of a word array, built from ``n`` shifted
     slices zipped together so the lambda references only lambda
-    variables (see :func:`_bind` — the unbound ``slice(w, i, n)`` form
-    re-evaluates ``w`` per gram).  Clamps exactly like
+    variables (see :func:`~..functions.columns.bind` — the unbound
+    ``slice(w, i, n)`` form re-evaluates ``w`` per gram).  Clamps like
     ``concat_ws(' ', slice(w, i, n))``: documents shorter than ``n``
     words yield ONE gram joining all their words (``arrays_zip`` pads
     the short shifted slices with NULL and ``concat_ws`` skips NULLs);
     a NULL word array yields a single empty-string gram (legacy
     ``concat_ws(NULL slice)`` behavior) — both proven value-identical
     to the historical form on the full corpus and the edge battery
-    (tests/test_linkage_fingerprint.py)."""
+    (tests/test_linkage_fingerprint.py).
+
+    One input differs from the historical form: a size-0 word array
+    yields NO grams (``[]``), where the historical form yielded one
+    empty-string gram (``['']``).  ``split`` never produces a size-0
+    array, so no caller that feeds ``split`` output sees it; a caller
+    passing a filtered token array (which can be empty) does."""
     def build(ww: Column) -> Column:
         m = F.greatest(F.size(ww) - (n - 1), F.lit(1))
         zipped = F.arrays_zip(
@@ -93,18 +81,18 @@ def word_ngrams(words: Column, n: int) -> Column:
     # the word array feeds n slices + size + the NULL guard — bind it so
     # the producing split/normalize chain evaluates once per row, not
     # n+2 times
-    return _bind(words, build)
+    return bind(words, build)
 
 
 def char_ngrams(text: Column | str, n: int = 3) -> Column:
     """Distinct character n-grams as an array — native higher-order fns.
-    The normalized text is bound once per row (:func:`_bind`); the
+    The normalized text is bound once per row (``bind``); the
     per-gram ``substr`` then copies ``n`` chars instead of re-running
     the lower/collapse chain per gram."""
     t = F.col(text) if isinstance(text, str) else text
     t = F.lower(collapse_whitespace(t))
     return F.array_distinct(
-        _bind(
+        bind(
             t,
             lambda tt: F.transform(
                 F.sequence(
@@ -162,14 +150,13 @@ def _require_ansi_off(spark=None) -> None:
         )
 
 
-def minhash_signature(
-    shingles: Column, num_hashes: int = 32, hash_fn: str = "xxhash64"
-) -> Column:
-    """k independent min-hashes — one array column, no UDF. One strong
-    content hash per shingle (xxhash64), then k universal-hash permutations
-    ``h_i = a_i*h + b_i mod 2^64`` (odd ``a_i`` makes each a bijection, so
-    minima are as independent as k salted rehashes but cost k multiply-adds
-    instead of k string hashes — ~10x cheaper per shingle).
+def minhash_signature(shingles: Column, num_hashes: int = 32) -> Column:
+    """k independent min-hashes — one array column, no UDF. One content
+    hash per shingle (:func:`~..functions.columns.md5_60`), then k
+    universal-hash permutations ``h_i = a_i*h + b_i mod 2^64`` (odd
+    ``a_i`` makes each a bijection, so minima are as independent as k
+    salted rehashes but cost k multiply-adds instead of k string hashes —
+    ~10x cheaper per shingle).
 
     Built as a SINGLE fold over the shingle array (one aggregate whose
     accumulator is the k-vector of running minima, merged via
@@ -184,15 +171,14 @@ def minhash_signature(
     (the session factory sets this; asserted here so a vanilla Spark 4
     session fails at plan time with guidance, not mid-job).
 
-    ``hash_fn``: shingle hash selector (see :func:`shingle_hash_expr`) —
-    ``md5_60`` makes the whole signature reproducible outside Spark (the
-    wrap-around fold is emulable with 128-bit ints), enabling an exact
-    DuckDB oracle of the production banding pipeline.
+    The md5_60 shingle hash makes the whole signature reproducible
+    outside Spark (the wrap-around fold is emulable with 128-bit ints),
+    enabling an exact DuckDB oracle of the production banding pipeline.
     """
     _require_ansi_off()
     av, bv = _perm_constants(num_hashes)
     init = F.array(*[F.lit(2**63 - 1).cast("long") for _ in range(num_hashes)])
-    hashed = F.transform(shingles, lambda s: shingle_hash_expr(s, hash_fn))
+    hashed = F.transform(shingles, md5_60)
 
     def merge(acc: Column, base: Column) -> Column:
         hs = F.array(
@@ -213,7 +199,6 @@ def minhash_signature_table(
     id_col: str,
     num_hashes: int = 32,
     shingle_n: int = 3,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Phase 1 of two-phase minhash dedup: the ``(id, sh, sig)`` signature
     table — shingles plus the k-vector minhash signature per document.
@@ -228,7 +213,7 @@ def minhash_signature_table(
     return (
         ensure_parallelism(df.select(F.col(id_col).alias("id"), F.col(text_col)))
         .select("id", word_shingles(text_col, shingle_n).alias("sh"))
-        .withColumn("sig", minhash_signature(F.col("sh"), num_hashes, hash_fn))
+        .withColumn("sig", minhash_signature(F.col("sh"), num_hashes))
     )
 
 
@@ -239,7 +224,6 @@ def save_minhash_signatures(
     table: str,
     num_hashes: int = 32,
     shingle_n: int = 3,
-    hash_fn: str = "xxhash64",
     num_buckets: int = 32,
 ) -> None:
     """Materialize the minhash signature table bucketed by ``id`` (pay the
@@ -247,10 +231,14 @@ def save_minhash_signatures(
     :func:`minhash_pairs_from_signatures`, whose two candidate-verify
     joins on ``id`` read co-located buckets with no Exchange on the
     signature side — the executor-pinned ``persist`` of the one-shot path
-    disappears entirely."""
+    disappears entirely.
+
+    Signatures hash shingles with md5_60. Earlier versions defaulted to
+    xxhash64, so a table written by them does not match signatures
+    computed now: rebuild it before mining new documents against it."""
     from ..sinks.bucketed import write_bucketed
 
-    sig = minhash_signature_table(df, text_col, id_col, num_hashes, shingle_n, hash_fn)
+    sig = minhash_signature_table(df, text_col, id_col, num_hashes, shingle_n)
     write_bucketed(sig, table, "id", num_buckets=num_buckets, sort_col="id")
 
 
@@ -312,7 +300,6 @@ def minhash_pairs_from_signatures(
     num_hashes: int = 32,
     bands: int | None = None,
     jaccard_threshold: float = 0.6,
-    round_digits: int | None = 4,
     _stats: dict | None = None,
 ) -> DataFrame:
     """Phase 2: banding -> bucket equi-join -> exact-Jaccard verify, from a
@@ -339,7 +326,7 @@ def minhash_pairs_from_signatures(
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    return _verify_pairs(cand, sig, jaccard_threshold, round_digits)
+    return _verify_pairs(cand, sig, jaccard_threshold)
 
 
 def _band_keys(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
@@ -365,16 +352,12 @@ def _band_keys(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
 
 
 def _verify_pairs(
-    cand: DataFrame,
-    sig: DataFrame,
-    jaccard_threshold: float,
-    round_digits: int | None,
+    cand: DataFrame, sig: DataFrame, jaccard_threshold: float
 ) -> DataFrame:
-    """Exact-Jaccard verification: shingles rejoin per-candidate only."""
+    """Exact-Jaccard verification: shingles rejoin per-candidate only. The
+    Jaccard is the raw int/int division (bit-identical across engines)."""
     sh = sig.select("id", "sh")
     jac = ngram_jaccard(F.col("sh_a"), F.col("sh_b"))
-    if round_digits is not None:
-        jac = F.round(jac, round_digits)
     # fixed-count repartition of the candidate id-pairs before the
     # verify joins: AQE coalesces the post-dedup candidate stream by its
     # tiny input bytes, and with the shingle sides broadcast the stream
@@ -397,7 +380,6 @@ def incremental_minhash_pairs(
     num_hashes: int = 32,
     bands: int | None = None,
     jaccard_threshold: float = 0.6,
-    round_digits: int | None = 4,
     _stats: dict | None = None,
 ) -> DataFrame:
     """Incremental near-dup mining for a daily ingest: every pair that
@@ -437,7 +419,7 @@ def incremental_minhash_pairs(
     )
     cand = nn.unionByName(nb).dropDuplicates(["id_a", "id_b"])
     all_sig = new_sig.select("id", "sh").unionByName(base_sig.select("id", "sh"))
-    return _verify_pairs(cand, all_sig, jaccard_threshold, round_digits)
+    return _verify_pairs(cand, all_sig, jaccard_threshold)
 
 
 def minhash_near_duplicates(
@@ -448,8 +430,6 @@ def minhash_near_duplicates(
     bands: int | None = None,
     shingle_n: int = 3,
     jaccard_threshold: float = 0.6,
-    round_digits: int | None = 4,
-    hash_fn: str = "xxhash64",
     _stats: dict | None = None,
 ) -> DataFrame:
     """MinHash+LSH near-dup pairs: returns (id_a, id_b, jaccard) with
@@ -472,10 +452,10 @@ def minhash_near_duplicates(
     the tuner is on by default (e.g. 32 hashes at threshold 0.6 ->
     (b=8, r=4); at 0.9 -> (b=4, r=8)); pass ``bands`` to override.
 
-    ``round_digits=None`` emits the raw int/int division (bit-identical
-    across engines; preferred for differential testing).
+    ``jaccard`` is the raw int/int division (bit-identical across
+    engines).
     """
-    sig = minhash_signature_table(df, text_col, id_col, num_hashes, shingle_n, hash_fn)
+    sig = minhash_signature_table(df, text_col, id_col, num_hashes, shingle_n)
     from pyspark import StorageLevel
 
     sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
@@ -483,31 +463,16 @@ def minhash_near_duplicates(
     # signature table can be released eagerly instead of pinning executor
     # memory for the caller's lifetime.
     out = minhash_pairs_from_signatures(
-        sig, num_hashes, bands, jaccard_threshold, round_digits, _stats=_stats
+        sig, num_hashes, bands, jaccard_threshold, _stats=_stats
     ).localCheckpoint(eager=True)
     sig.unpersist()
     return out
 
 
-def shingle_hash_expr(s: Column, hash_fn: str = "xxhash64") -> Column:
-    """64-bit shingle hash, selectable for engine parity.
-
-    - ``xxhash64``: fastest (JVM native); not reproducible outside Spark.
-    - ``md5_60``: first 15 hex chars of md5 as a 60-bit non-negative long —
-      bit-identical in any engine with md5 (DuckDB:
-      ``('0x' || substr(md5(s),1,15))::BIGINT``), which makes simhash
-      fingerprints differentially testable end-to-end.
-    """
-    if hash_fn == "xxhash64":
-        return F.xxhash64(s)
-    if hash_fn == "md5_60":
-        return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
-    raise ValueError(f"unknown shingle hash_fn: {hash_fn!r}")
-
-
 def simhash64(text: Column | str, ngram: int = 2, bits: int = 64) -> Column:
     """64-bit SimHash over word n-grams, native expressions only: for each
-    bit b, sum +/-1 over token hashes' bit b; bit set iff sum > 0.
+    bit b, sum +/-1 over the md5_60 shingle hashes' bit b; bit set iff
+    sum > 0 (bits 60-63 of an md5_60 hash are 0, so they never set).
 
     The per-bit vote is one array fold; the 64 folds run inside a single
     projection (whole-stage codegen), no Python per row.
@@ -533,17 +498,16 @@ def simhash64(text: Column | str, ngram: int = 2, bits: int = 64) -> Column:
             )
         return out
 
-    return _bind(F.transform(sh, lambda s: F.xxhash64(s)), _votes)
+    return bind(F.transform(sh, md5_60), _votes)
 
 
 def simhash_signatures(
-    df: DataFrame, text_col: str, id_col: str, ngram: int = 2,
-    hash_fn: str = "xxhash64",
+    df: DataFrame, text_col: str, id_col: str, ngram: int = 2
 ) -> DataFrame:
     """(id, simhash) via the hybrid fast path: shingle hashing stays in the
-    JVM (xxhash64, deterministic), the 64-bit vote tally runs as an
-    Arrow-batched numpy kernel. Equivalent to ``simhash64`` but ~2 orders
-    of magnitude cheaper than 64 codegen'd array folds per row."""
+    JVM (md5_60, reproducible in any engine), the 64-bit vote tally runs
+    as an Arrow-batched numpy kernel. Equivalent to ``simhash64`` but ~2
+    orders of magnitude cheaper than 64 codegen'd array folds per row."""
     import numpy as np
     import pandas as pd
 
@@ -551,10 +515,7 @@ def simhash_signatures(
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t"))
     ).select(
         "id",
-        F.transform(
-            word_shingles(F.col("t"), ngram),
-            lambda s: shingle_hash_expr(s, hash_fn),
-        ).alias("hs"),
+        F.transform(word_shingles(F.col("t"), ngram), md5_60).alias("hs"),
     )
 
     def tally(batches):
@@ -582,8 +543,7 @@ def hamming64(a: Column, b: Column) -> Column:
 
 
 def simhash_near_duplicates(
-    df: DataFrame, text_col: str, id_col: str, max_hamming: int = 3,
-    hash_fn: str = "xxhash64",
+    df: DataFrame, text_col: str, id_col: str, max_hamming: int = 3
 ) -> DataFrame:
     """SimHash near-dup pairs via 4x16-bit band blocking: any pair within
     Hamming distance 3 shares at least one of 4 bands (pigeonhole), so the
@@ -591,8 +551,8 @@ def simhash_near_duplicates(
 
     With ``max_hamming <= 3`` recall is exactly 1 (pigeonhole guarantee),
     so the output IS the set of pairs with hamming(simhash) <= max_hamming
-    — with ``hash_fn='md5_60'`` that set is reproducible in any engine."""
-    sim = simhash_signatures(df, text_col, id_col, hash_fn=hash_fn)
+    — and, hashed with md5_60, that set is reproducible in any engine."""
+    sim = simhash_signatures(df, text_col, id_col)
     banded = sim.select(
         "id",
         "sh",
@@ -738,7 +698,6 @@ def prefix_filter_jaccard_pairs(
     id_col: str = "doc_id",
     threshold: float = 0.6,
     ngram: int = 3,
-    hash_fn: str = "md5_60",
 ) -> DataFrame:
     """EXACT set-similarity self-join: all document pairs whose word
     n-gram shingle sets have Jaccard >= ``threshold`` — with the
@@ -783,10 +742,7 @@ def prefix_filter_jaccard_pairs(
     sets = ensure_parallelism(df.select(F.col(id_col), F.col(text_col))).select(
         F.col(id_col).alias("_id"),
         F.array_distinct(
-            F.transform(
-                word_shingles(F.col(text_col), ngram),
-                lambda s: shingle_hash_expr(s, hash_fn),
-            )
+            F.transform(word_shingles(F.col(text_col), ngram), md5_60)
         ).alias("hs"),
     )
     # hashing is the CPU-dominant step and `sets` feeds three consumers
@@ -864,7 +820,6 @@ def containment_pairs(
     id_col: str = "doc_id",
     threshold: float = 0.8,
     ngram: int = 3,
-    hash_fn: str = "md5_60",
 ) -> DataFrame:
     """EXACT asymmetric set-containment join: all ordered pairs where
     document A's shingle set is (near-)contained in document B's —
@@ -904,10 +859,7 @@ def containment_pairs(
     ).select(
         F.col(id_col).alias("_id"),
         F.array_distinct(
-            F.transform(
-                word_shingles(F.col(text_col), ngram),
-                lambda s: shingle_hash_expr(s, hash_fn),
-            )
+            F.transform(word_shingles(F.col(text_col), ngram), md5_60)
         ).alias("hs"),
     )
     # try/finally: release the shingle cache even if a downstream job
@@ -1058,7 +1010,6 @@ def repeated_kgram_spans(
     id_col: str = "doc_id",
     k: int = 20,
     min_count: int = 2,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Exact repeated-substring spans — the ExactSubstr dedup modality
     (Lee et al. 2022, "Deduplicating Training Data Makes Language Models
@@ -1068,13 +1019,11 @@ def repeated_kgram_spans(
     counting finds exactly the spans a suffix array would, with no
     suffix-array build:
 
-      1. explode each document into (id, pos, hash(k-gram)) — O(total
-         chars) rows, produced narrowly in the scan stage. ``hash_fn``
-         is ``xxhash64`` by default (8-byte bigint shuffle key; the
-         output depends only on gram EQUALITY, so any collision-safe
-         hash yields identical spans — the DuckDB oracle uses md5 and
-         still matches); pass ``md5`` to mirror an external system
-         bit-for-bit;
+      1. explode each document into (id, pos, xxhash64(k-gram)) —
+         O(total chars) rows, produced narrowly in the scan stage, with
+         an 8-byte bigint shuffle key. The output depends only on gram
+         EQUALITY, so any collision-safe hash yields identical spans —
+         the DuckDB oracle uses md5 and still matches;
       2. ONE window count partitioned by the gram hash (single exchange
          keyed by the hash; the payload per row is just id+pos, the text
          itself never shuffles) keeps positions whose gram occurs
@@ -1090,7 +1039,7 @@ def repeated_kgram_spans(
     count for groupBy+broadcast-semi-join when the duplicated-gram set
     is small relative to the corpus.
     """
-    grams = kgram_table(df, text_col, id_col, k, hash_fn)
+    grams = kgram_table(df, text_col, id_col, k)
     dup = grams.withColumn(
         "cnt", F.count(F.lit(1)).over(Window.partitionBy("h"))
     ).filter(F.col("cnt") >= min_count)
@@ -1102,10 +1051,9 @@ def kgram_table(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 20,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Phase 1 of two-phase ExactSubstr: the positional gram table
-    ``(_id, pos, h)`` — one row per character position, hash of the
+    ``(_id, pos, h)`` — one row per character position, xxhash64 of the
     length-``k`` gram starting there. Narrow (scan-stage) explode; this
     is what :func:`save_kgram_table` materializes at corpus scale."""
     t, i = F.col(text_col), F.col(id_col)
@@ -1130,7 +1078,7 @@ def kgram_table(
         .select(
             "_id",
             "pos",
-            F.expr(f"{hash_fn}(substring(_t, pos, {k}))").alias("h"),
+            F.expr(f"xxhash64(substring(_t, pos, {k}))").alias("h"),
         )
     )
 
@@ -1167,7 +1115,6 @@ def save_kgram_table(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 20,
-    hash_fn: str = "xxhash64",
     num_buckets: int = 32,
 ) -> None:
     """Materialize the positional gram table bucketed by the gram hash
@@ -1178,7 +1125,7 @@ def save_kgram_table(
     against co-located buckets with no Exchange on the base side."""
     from ..sinks.bucketed import write_bucketed
 
-    grams = kgram_table(df, text_col, id_col, k, hash_fn)
+    grams = kgram_table(df, text_col, id_col, k)
     write_bucketed(grams, table, "h", num_buckets=num_buckets, sort_col="h")
 
 
@@ -1189,7 +1136,6 @@ def incremental_kgram_spans(
     id_col: str = "doc_id",
     k: int = 20,
     min_count: int = 2,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Daily-batch ExactSubstr: repeated-substring spans for the NEW docs
     against (base corpus + batch), without re-exploding the base corpus.
@@ -1204,7 +1150,7 @@ def incremental_kgram_spans(
     spans that exist ONLY inside the base corpus, which were already
     reported when the base was built.
     """
-    grams_new = kgram_table(new_docs, text_col, id_col, k, hash_fn)
+    grams_new = kgram_table(new_docs, text_col, id_col, k)
     base_counts = base_grams.groupBy("h").agg(F.count(F.lit(1)).alias("base_cnt"))
     cnt_new = F.count(F.lit(1)).over(Window.partitionBy("h"))
     dup = (
@@ -1223,7 +1169,6 @@ def remove_repeated_spans(
     id_col: str = "doc_id",
     k: int = 20,
     min_count: int = 2,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """ExactSubstr dedup, removal stage (Lee et al. 2022 cut the spans
     they detect; this is that cut): rewrite each document with every
@@ -1241,7 +1186,7 @@ def remove_repeated_spans(
 
     Returns (id, clean_text, n_removed_chars).
     """
-    spans = repeated_kgram_spans(df, text_col, id_col, k, min_count, hash_fn)
+    spans = repeated_kgram_spans(df, text_col, id_col, k, min_count)
     per_doc = spans.groupBy(id_col).agg(
         F.array_sort(
             F.collect_list(F.struct("span_start", "span_len"))
@@ -1363,10 +1308,9 @@ def ngram_novelty_scores(
     partials, and one digest equi-join + one doc aggregation produce
     both counters in a single pass.
     """
-    h60 = F.conv(F.substring(F.md5(F.col("g")), 1, 15), 16, 10).cast("long")
     grams = docs.select(
         F.col(id_col), F.explode(word_shingles(text_col, n)).alias("g")
-    ).select(id_col, h60.alias("h"))
+    ).select(id_col, md5_60("g").alias("h"))
     freq = grams.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
     per = (
         grams.join(freq, "h")

@@ -22,9 +22,9 @@ The reference has no near-dup operator at all (its only dedup is the exact
 ``drop_duplicates(subset=['link'])``, reference: transform.py:62); this is
 part of the north-star LLM-curation layer (SURVEY.md §2b).
 
-With ``hash_fn='md5_60'`` every selected fingerprint is bit-reproducible
-in DuckDB (same md5-prefix hash, same window minima), so the whole
-pipeline — selection AND pairing — is differentially testable.
+k-grams hash with md5_60, so every selected fingerprint is
+bit-reproducible in DuckDB (same md5-prefix hash, same window minima) and
+the whole pipeline — selection AND pairing — is differentially testable.
 """
 
 from __future__ import annotations
@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import shingle_hash_expr
+from ..functions.columns import bind, md5_60
 
 __all__ = [
     "kgram_hash_array",
@@ -48,8 +48,8 @@ def _words(text: Column) -> Column:
     return F.split(F.lower(F.trim(F.regexp_replace(text, r"\s+", " "))), " ")
 
 
-def kgram_hash_array(text: Column | str, k: int = 3, hash_fn: str = "md5_60") -> Column:
-    """Positional array of 64-bit hashes of every word k-gram.
+def kgram_hash_array(text: Column | str, k: int = 3) -> Column:
+    """Positional array of md5_60 hashes of every word k-gram.
 
     Unlike ``word_shingles`` this keeps POSITION (no distinct) — winnowing
     needs the k-gram sequence, not the k-gram set. Pure narrow expression:
@@ -67,9 +67,7 @@ def kgram_hash_array(text: Column | str, k: int = 3, hash_fn: str = "md5_60") ->
     # re-evaluated THIS whole array per window: the two fixes together
     # took the sf0.001 fingerprint pass from 33 s to sub-second with
     # bit-identical output (the DuckDB oracle pins the selected set).
-    return F.transform(
-        word_ngrams(_words(text), k), lambda g: shingle_hash_expr(g, hash_fn)
-    )
+    return F.transform(word_ngrams(_words(text), k), md5_60)
 
 
 def winnow(hashes: Column, w: int = 4) -> Column:
@@ -81,8 +79,6 @@ def winnow(hashes: Column, w: int = 4) -> Column:
     degenerate-window rule). ``slice`` clamps at the array end in both
     Spark and DuckDB, so the mirror is exact.
     """
-    from .dedup import _bind
-
     # w shifted slices zipped, minimum per window via least() — the
     # lambda references only lambda variables, and the hash array
     # (itself a full k-gram + hash chain) is bound once per row.  The
@@ -105,7 +101,7 @@ def winnow(hashes: Column, w: int = 4) -> Column:
             zipped, lambda s: F.least(*[s[f"h{i}"] for i in range(w)])
         )
 
-    return F.array_distinct(_bind(hashes, build))
+    return F.array_distinct(bind(hashes, build))
 
 
 def winnowing_fingerprints(
@@ -114,7 +110,6 @@ def winnowing_fingerprints(
     id_col: str = "doc_id",
     k: int = 3,
     w: int = 4,
-    hash_fn: str = "md5_60",
 ) -> DataFrame:
     """One row per (document, selected fingerprint).
 
@@ -123,7 +118,7 @@ def winnowing_fingerprints(
     """
     from .util import ensure_parallelism
 
-    fps = winnow(kgram_hash_array(F.col(text_col), k, hash_fn), w)
+    fps = winnow(kgram_hash_array(F.col(text_col), k), w)
     # per-token hashing is CPU-bound and a single-file scan arrives as
     # one task — spread it first (the minhash_signature_table pattern)
     return ensure_parallelism(df.select(F.col(id_col), F.col(text_col))).select(
@@ -139,7 +134,6 @@ def winnowing_near_duplicates(
     w: int = 4,
     min_shared: int = 2,
     max_df: int = 50,
-    hash_fn: str = "md5_60",
 ) -> DataFrame:
     """Candidate near-duplicate pairs: documents sharing >= ``min_shared``
     winnowing fingerprints, with hot fingerprints (document frequency >
@@ -162,7 +156,7 @@ def winnowing_near_duplicates(
     # released once the pair table is materialized; the steady state
     # materializes the fingerprint table instead (the
     # save_minhash_signatures note applies verbatim).
-    fps = winnowing_fingerprints(df, text_col, id_col, k, w, hash_fn).persist(
+    fps = winnowing_fingerprints(df, text_col, id_col, k, w).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     rare = (

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from real_estate_project1_etl_spark.functions.columns import md5_60
 from real_estate_project1_etl_spark.operators.quality import _hash60
 
 
@@ -78,7 +79,7 @@ def pack_sequences(
         key = F.concat_ws(
             "#", F.col(id_col).cast("string"), F.lit(str(int(epoch)))
         )
-        ph = F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("long")
+        ph = md5_60(key)
     toks = F.col(tokens_col).cast("long")
     d = (
         df.filter(toks > 0)

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.columns import bind, md5_60
+
 
 def validate(
     df: DataFrame, rules: dict[str, Column]
@@ -76,7 +78,7 @@ def _hash60(key_cols: list[str]):
     of md5) — engine-reproducible (DuckDB:
     ``('0x' || substr(md5(k),1,15))::BIGINT``)."""
     key = F.concat_ws("#", *[F.col(c).cast("string") for c in key_cols])
-    return F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("long")
+    return md5_60(key)
 
 
 def hash_threshold_fractions(fractions: dict[str, float]) -> dict[str, int]:
@@ -614,7 +616,6 @@ def hashed_linear_classifier(
     threshold_milli: int,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hash_fn: str = "md5_60",
 ) -> DataFrame:
     """Quality-classifier INFERENCE over hashed bag-of-words features —
     the fastText-style linear gate modern curation recipes run at corpus
@@ -624,13 +625,9 @@ def hashed_linear_classifier(
 
     ``weights`` is a ``(feature_id, weight_milli)`` table (integer
     milli-units — training happens offline; inference is the engine's
-    job). ``hash_fn``: ``md5_60`` (default) makes feature ids, scores,
-    and the kept SET bit-identical in any engine — differentially
-    checkable, stable under retries and repartitioning; ``xxhash64``
-    (JVM-native, measured ~3.5x the token throughput at the 8M-token
-    probe: 2.3 s vs 7.8 s warm) is the production choice when the trained model's hash
-    matches and cross-engine replay isn't needed — its negative hashes
-    are folded with ``pmod`` so feature ids stay in [0, dim).
+    job). Tokens hash with md5_60, which makes feature ids, scores, and
+    the kept SET bit-identical in any engine — differentially checkable,
+    stable under retries and repartitioning.
     Logistic link not applied: sigmoid is monotone, so thresholding the
     linear score with a pre-transformed cutoff is the same gate with
     exact integer arithmetic.
@@ -647,10 +644,9 @@ def hashed_linear_classifier(
     The corpus text never shuffles, no Python anywhere.
     """
     from .corpus import tokenize_positions
-    from .dedup import shingle_hash_expr
     from .util import ensure_parallelism
 
-    fid = F.pmod(shingle_hash_expr(F.col("w"), hash_fn), F.lit(dim))
+    fid = F.pmod(md5_60("w"), F.lit(dim))
     # per-token hashing is CPU-bound and a single-file scan is one task —
     # spread before the explode (the same guard minhash/prefix-filter use)
     feats = (
@@ -700,7 +696,6 @@ def train_hashed_classifier(
     label_col: str = "label",
     text_col: str = "text",
     id_col: str = "doc_id",
-    hash_fn: str = "md5_60",
     fit_bias: bool = False,
     l2_num: int = 0,
     l2_den: int = 1,
@@ -718,7 +713,7 @@ def train_hashed_classifier(
     end to end, so an oracle can mirror the full training trajectory):
 
     - features ``x_ij`` = token count of doc ``i`` in hash bucket ``j``
-      (``h(tok) mod dim``, same ``hash_fn`` contract as inference);
+      (``md5_60(tok) mod dim``, the same hash as inference);
     - margin ``m_i = sum_j x_ij * w_j`` in milli-units (bigint, exact);
     - predicted probability via the HARD sigmoid ``p = clip(1/2 + m/4,
       0, 1)`` — the standard piecewise-linear logistic link (used
@@ -793,7 +788,6 @@ def train_hashed_classifier(
     to the driver.
     """
     from .corpus import tokenize_positions
-    from .dedup import shingle_hash_expr
     from .util import ensure_parallelism
 
     if dim < 1:
@@ -824,7 +818,7 @@ def train_hashed_classifier(
             F.col(label_col).cast("int").alias("_y"),
         )
     )
-    fid = F.pmod(shingle_hash_expr(F.col("w"), hash_fn), F.lit(dim))
+    fid = F.pmod(md5_60("w"), F.lit(dim))
     # the label rides the feature table (one broadcast join absorbed
     # into the feats checkpoint) so each GD iteration computes residuals
     # straight out of the margin aggregation — no per-iteration labels
@@ -1259,7 +1253,6 @@ def _hashed_gram_counts(
     dim: int,
     text_col: str,
     id_col: str,
-    hash_fn: str,
     flag_col: str | None = None,
 ) -> DataFrame:
     """Per-document hashed n-gram (unigram + bigram) bucket counts —
@@ -1283,20 +1276,18 @@ def _hashed_gram_counts(
     documented at ``corpus.bigram_lm_scores``.
     """
     from ..functions.text import collapse_whitespace
-    from .dedup import shingle_hash_expr
     from .util import ensure_parallelism
 
     keep = [id_col, text_col] + ([flag_col] if flag_col else [])
     docs = ensure_parallelism(
         docs.select(*keep).filter(F.col(id_col).isNotNull())
     )
-    from .dedup import _bind
-
     ws = F.split(F.lower(collapse_whitespace(F.col(text_col))), " ")
     # word array bound once (round 14): the un-bound form references ws
     # three times (itself + two slices) and the interpreted evaluator
-    # re-runs the normalize/split chain per reference — see dedup._bind
-    allg = _bind(
+    # re-runs the normalize/split chain per reference — see
+    # functions.columns.bind
+    allg = bind(
         ws,
         lambda w: F.concat(
             w,
@@ -1307,14 +1298,14 @@ def _hashed_gram_counts(
             ),
         ),
     )
-    gcols = [F.col(id_col)] + ([F.col(flag_col)] if flag_col else [])
-    grams = docs.select(*gcols, F.explode(allg).alias("g"))
-    # bucket id: for md5_60 with a power-of-two dim, the low bits of the
-    # 60-bit value only depend on the LOW hex digits — convert just
+    gkeys = [id_col] + ([flag_col] if flag_col else [])
+    grams = docs.select(*gkeys, F.explode(allg).alias("g"))
+    # bucket id: for a power-of-two dim, the low bits of the 60-bit
+    # md5_60 value only depend on the LOW hex digits — convert just
     # ceil(log16(dim)) chars instead of all 15 and pmod (value-identical
     # to pmod(md5_60, dim), asserted below; measured another ~10% off
-    # the feature pass).  Other hash_fn / dim shapes keep the full hash.
-    if hash_fn == "md5_60" and dim > 0 and (dim & (dim - 1)) == 0:
+    # the feature pass).  Other dims keep the full hash.
+    if dim > 0 and (dim & (dim - 1)) == 0:
         n_hex = max(1, -(-(dim - 1).bit_length() // 4))
         assert (16**n_hex) % dim == 0
         fid = F.pmod(
@@ -1324,10 +1315,10 @@ def _hashed_gram_counts(
             F.lit(dim),
         )
     else:
-        fid = F.pmod(shingle_hash_expr(F.col("g"), hash_fn), F.lit(dim))
+        fid = F.pmod(md5_60("g"), F.lit(dim))
     return (
-        grams.select(*gcols, fid.alias("feature_id"))
-        # semantically a no-op (pmod of md5/xxhash of a non-null string is
+        grams.select(*gkeys, fid.alias("feature_id"))
+        # semantically a no-op (pmod of md5_60 of a non-null string is
         # never NULL) but load-bearing for stage reuse: downstream joins
         # push isnotnull(feature_id) into SOME consumers' subtrees and not
         # others, and the diverged subtrees stop canonically matching, so
@@ -1337,7 +1328,7 @@ def _hashed_gram_counts(
         # every consumer sees ONE identical aggregate subtree
         # (ReuseExchange) — the corpus.bigram_lm_scores lesson.
         .filter(F.col("feature_id").isNotNull())
-        .groupBy(*([id_col] + ([flag_col] if flag_col else [])), "feature_id")
+        .groupBy(*gkeys, "feature_id")
         .agg(F.count(F.lit(1)).alias("n"))
     )
 
@@ -1348,7 +1339,6 @@ def dsir_importance_weights(
     dim: int = 4096,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hash_fn: str = "md5_60",
     scale: int = 1_000_000,
     target_pred: Column | None = None,
 ) -> DataFrame:
@@ -1400,11 +1390,10 @@ def dsir_importance_weights(
     if target_pred is None:
         ratio = dsir_ratio_model(
             raw, target, dim=dim, text_col=text_col, id_col=id_col,
-            hash_fn=hash_fn, scale=scale,
+            scale=scale,
         )
         return dsir_score_with_model(
-            raw, ratio, dim=dim, text_col=text_col, id_col=id_col,
-            hash_fn=hash_fn,
+            raw, ratio, dim=dim, text_col=text_col, id_col=id_col
         )
     # FUSED single-tokenize path (round 14): when the target is a
     # predicate-defined SLICE of ``raw`` (the common in-corpus-target
@@ -1422,7 +1411,7 @@ def dsir_importance_weights(
     # fused-vs-generic equality test.
     feats = _hashed_gram_counts(
         raw.withColumn("_is_t", target_pred),
-        dim, text_col, id_col, hash_fn, flag_col="_is_t",
+        dim, text_col, id_col, flag_col="_is_t",
     ).localCheckpoint(eager=True)
     c_r = feats.groupBy("feature_id").agg(F.sum("n").alias("c_r"))
     c_t = (
@@ -1479,7 +1468,6 @@ def dsir_ratio_model(
     dim: int = 4096,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hash_fn: str = "md5_60",
     scale: int = 1_000_000,
 ) -> DataFrame:
     """The fit stage of :func:`dsir_importance_weights`, exposed for the
@@ -1493,8 +1481,8 @@ def dsir_ratio_model(
     :func:`dsir_score_with_model` scores them 0 (a gram the model never
     saw contributes no evidence either way).
     """
-    feats_r = _hashed_gram_counts(raw, dim, text_col, id_col, hash_fn)
-    feats_t = _hashed_gram_counts(target, dim, text_col, id_col, hash_fn)
+    feats_r = _hashed_gram_counts(raw, dim, text_col, id_col)
+    feats_t = _hashed_gram_counts(target, dim, text_col, id_col)
     c_r = feats_r.groupBy("feature_id").agg(F.sum("n").alias("c_r"))
     c_t = feats_t.groupBy("feature_id").agg(F.sum("n").alias("c_t"))
     # corpus totals as sum(when(...)) — nullable, so Catalyst can't
@@ -1524,7 +1512,6 @@ def dsir_score_with_model(
     dim: int = 4096,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hash_fn: str = "md5_60",
 ) -> DataFrame:
     """The score stage of :func:`dsir_importance_weights`: per-document
     importance weights against a FIXED ``(feature_id, ratio_ppm)`` model
@@ -1537,7 +1524,7 @@ def dsir_score_with_model(
     coalesce), so a stale-but-usable model degrades gracefully instead
     of dropping documents.
     """
-    feats = _hashed_gram_counts(docs, dim, text_col, id_col, hash_fn)
+    feats = _hashed_gram_counts(docs, dim, text_col, id_col)
     scored = (
         feats.join(F.broadcast(ratio), "feature_id", "left")
         .groupBy(id_col)
@@ -1827,7 +1814,6 @@ def feature_label_chi2(
     label_col: str = "label",
     text_col: str = "text",
     id_col: str = "doc_id",
-    hash_fn: str = "md5_60",
 ) -> DataFrame:
     """Per-feature chi-square association with a binary label over the
     SAME hashed bag-of-words feature map the classifier family uses —
@@ -1863,10 +1849,9 @@ def feature_label_chi2(
     feature_id to <= dim rows; the (N, P) totals broadcast.
     """
     from .corpus import tokenize_positions
-    from .dedup import shingle_hash_expr
     from .util import ensure_parallelism
 
-    fid = F.pmod(shingle_hash_expr(F.col("w"), hash_fn), F.lit(dim))
+    fid = F.pmod(md5_60("w"), F.lit(dim))
     y = docs.filter(F.col(id_col).isNotNull()).select(
         F.col(id_col).alias("doc_id"),
         F.col(label_col).cast("bigint").alias("_y"),

@@ -267,21 +267,6 @@ def asof_join(
     )
 
 
-def range_join(
-    left: DataFrame,
-    right: DataFrame,
-    key_cond,
-    lower,
-    upper,
-) -> DataFrame:
-    """Interval/range join: pairs where ``key_cond`` matches and the right
-    timestamp falls in (lower, upper]. Expressed as an equi-join with a
-    residual range predicate, so Catalyst hash-joins on the equality and
-    filters the range — never a cross product. Per-key fan-out is bounded
-    by the interval width; salt the key if one key dominates."""
-    return left.join(right, key_cond & lower & upper)
-
-
 def sliding_distinct_users(
     events: DataFrame,
     ts_col: str = "ts",

@@ -40,8 +40,10 @@ the sketch's defining mergeability); the output is identical because
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..functions.columns import md5_60
 
 __all__ = [
     "cms_build",
@@ -52,19 +54,10 @@ __all__ = [
     "kmv_distinct",
     "kmv_set_overlap",
     "log2_hist_sketch",
-    "md5_60",
 ]
 
 #: hash domain size: md5_60 hashes are uniform on [0, 2^60)
 _DOMAIN = float(2**60)
-
-
-def md5_60(v: Column | str) -> Column:
-    """First 15 hex chars of md5 as a non-negative 60-bit long —
-    bit-identical in any engine with md5 (same contract as
-    :func:`~.dedup.shingle_hash_expr` ``md5_60``)."""
-    c = F.col(v) if isinstance(v, str) else v
-    return F.conv(F.substring(F.md5(c.cast("string")), 1, 15), 16, 10).cast("long")
 
 
 def kmv_distinct(
@@ -262,9 +255,7 @@ def join_size_estimate(
     tau = 1 << (60 - log2_frac)
 
     def sampled_counts(df: DataFrame, key: str) -> DataFrame:
-        h = F.conv(
-            F.substring(F.md5(F.col(key).cast("string")), 1, 15), 16, 10
-        ).cast("long")
+        h = md5_60(key)
         return (
             df.filter(h < F.lit(tau))
             .groupBy(F.col(key).alias("_k"))

@@ -270,7 +270,7 @@ def kfold_target_encoding(
     output is (category x fold)-sized, NOT row-sized — applying the
     encoding downstream is a broadcast join, never a second shuffle.
     """
-    from real_estate_project1_etl_spark.operators.sketch import md5_60
+    from real_estate_project1_etl_spark.functions.columns import md5_60
 
     base = df.select(
         F.col(cat_col).alias("category"),

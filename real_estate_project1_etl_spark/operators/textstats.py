@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.columns import bind, md5_60
 from ..functions.text import collapse_whitespace
 
 #: tiny per-language stopword marker sets for the n-gram/stopword heuristic.
@@ -37,12 +38,10 @@ def _rc(col: Column, pattern: str) -> Column:
 
 
 def whitespace_token_count(text: Column | str) -> Column:
-    from .dedup import _bind
-
     t = F.col(text) if isinstance(text, str) else text
     # normalized text bound once (round 14): the two references (length
     # guard + split) each re-ran the collapse regex per row
-    return _bind(
+    return bind(
         collapse_whitespace(t),
         lambda tt: F.when(F.length(tt) == 0, F.lit(0)).otherwise(
             F.size(F.split(tt, " "))
@@ -255,7 +254,7 @@ def repetition_ratio(text: Column | str, n: int = 3) -> Column:
     """Gopher-style repetition signal: 1 - distinct/total word n-grams.
     High values flag boilerplate/spam for quality filtering. All
     higher-order array functions — no shuffle, no Python."""
-    from .dedup import _bind, word_ngrams
+    from .dedup import word_ngrams
 
     t = F.col(text) if isinstance(text, str) else text
     w = F.split(F.lower(collapse_whitespace(t)), " ")
@@ -271,7 +270,7 @@ def repetition_ratio(text: Column | str, n: int = 3) -> Column:
             F.size(F.array_distinct(word_ngrams(ww, n))).alias("ndist"),
         )
 
-    s = _bind(w, build)
+    s = bind(w, build)
     return F.when(
         s["total"] > 0,
         F.lit(1.0) - s["ndist"] / s["total"],
@@ -358,8 +357,6 @@ def token_chunk_documents(
 
     Returns (id, chunk_id, chunk, n_tokens); empty documents yield no rows.
     """
-    from .dedup import _bind
-
     tpc = tokens_per_chunk
 
     # the token array is bound once per row (the unbound lambda
@@ -385,7 +382,7 @@ def token_chunk_documents(
             ),
         )
 
-    chunks = _bind(
+    chunks = bind(
         F.filter(F.split(F.col(text_col), r"\s+"), lambda x: x != F.lit("")),
         build,
     )
@@ -442,22 +439,18 @@ def hashing_trick_features(tokens: Column, dim: int = 16) -> Column:
     builds: no vocabulary shuffle, no model to fit or ship — each row's
     vector is a pure function of its tokens.
 
-    Deterministic md5-based bucket hash (see dedup.shingle_hash_expr
-    ``md5_60``), so the embedding is bit-reproducible in any engine —
-    the retrieval pipeline built on it is differentially testable
-    end-to-end.  All JVM higher-order functions; one pass over tokens
+    Deterministic md5-based bucket hash
+    (:func:`~..functions.columns.md5_60`), so the embedding is
+    bit-reproducible in any engine — the retrieval pipeline built on it
+    is differentially testable end-to-end.  All JVM higher-order
+    functions; one pass over tokens
     (hash hoisted out of the per-bucket counts).
     """
-    from .dedup import _bind, shingle_hash_expr
-
     # the hashed-token array is BOUND once per row (round 14): an
     # unbound reference inside the per-bucket lambda re-hashed every
     # token once per bucket (dim x) in the interpreted evaluator
-    return _bind(
-        F.transform(
-            tokens,
-            lambda t: F.pmod(shingle_hash_expr(t, "md5_60"), F.lit(dim)),
-        ),
+    return bind(
+        F.transform(tokens, lambda t: F.pmod(md5_60(t), F.lit(dim))),
         lambda hashed: F.transform(
             F.sequence(F.lit(0), F.lit(dim - 1)),
             lambda j: F.size(F.filter(hashed, lambda x: x == j)).cast(
@@ -475,7 +468,6 @@ def bloom_decontaminate(
     ngram: int = 8,
     n_words: int = 1 << 16,
     k: int = 4,
-    hash_fn: str = "md5_60",
 ) -> DataFrame:
     """:func:`decontaminate` for benchmark sets too big to broadcast as an
     exact key list: the membership structure is a split-block Bloom filter
@@ -494,21 +486,17 @@ def bloom_decontaminate(
     Scale shape: benchmark side is one bit_or aggregation to ``n_words``
     rows; corpus grams compute (word, mask) in the scan stage and
     broadcast-join the filter table; corpus text shuffles zero times.
-    With ``hash_fn='md5_60'`` both hash lanes (h1 selects the block, h2's
-    6-bit fields select bits) are engine-reproducible, so even this
+    Both hash lanes are md5_60 (h1 selects the block, h2's 6-bit fields
+    select bits), so they are engine-reproducible and even this
     probabilistic operator admits an exact DuckDB oracle.
     """
-    from .dedup import shingle_hash_expr, word_shingles
+    from .dedup import word_shingles
 
     def probes(df, out):
         g = F.explode(word_shingles(F.col(text_col), ngram)).alias("g")
         base = df.select(F.col(id_col).alias(out), g)
-        if hash_fn == "md5_60":
-            h1 = shingle_hash_expr(F.col("g"), "md5_60")
-            h2 = shingle_hash_expr(F.concat(F.lit("2#"), F.col("g")), "md5_60")
-        else:
-            h1 = F.xxhash64(F.col("g"), F.lit(1))
-            h2 = F.xxhash64(F.col("g"), F.lit(2))
+        h1 = md5_60("g")
+        h2 = md5_60(F.concat(F.lit("2#"), F.col("g")))
         # shiftleft's bit-count arg must be a literal in the Python API, so
         # the per-row shift goes through an expr string over the h2 column
         mask_sql = " | ".join(

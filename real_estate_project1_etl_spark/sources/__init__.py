@@ -1,2 +1,2 @@
 from .parquet import load_table, load_tables  # noqa: F401
-from .csv import read_tsv, write_ready_tsv_schema  # noqa: F401
+from .csv import read_tsv  # noqa: F401

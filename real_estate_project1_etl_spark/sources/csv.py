@@ -34,8 +34,3 @@ def read_tsv(
     else:
         reader = reader.schema(PROPERTIES_RAW)
     return reader.csv(path)
-
-
-def write_ready_tsv_schema() -> StructType:
-    """Schema contract for files produced by the extract stage."""
-    return PROPERTIES_RAW

@@ -50,7 +50,6 @@ def incremental_dedup_batch(
     bands: int | None = None,
     shingle_n: int = 3,
     jaccard_threshold: float = 0.6,
-    hash_fn: str = "xxhash64",
 ) -> tuple[DataFrame, DataFrame]:
     """One ingest step: mine the batch against the corpus signatures and
     return ``(survivors, survivor_signatures)``.
@@ -63,13 +62,13 @@ def incremental_dedup_batch(
     pure function of (batch, store) and micro-batch replay is idempotent.
     """
     new_sig = minhash_signature_table(
-        batch_df, text_col, id_col, num_hashes, shingle_n, hash_fn
+        batch_df, text_col, id_col, num_hashes, shingle_n
     )
     from pyspark import StorageLevel
 
     new_sig = new_sig.persist(StorageLevel.MEMORY_AND_DISK)
     pairs = incremental_minhash_pairs(
-        new_sig, base_sig, num_hashes, bands, jaccard_threshold, round_digits=None
+        new_sig, base_sig, num_hashes, bands, jaccard_threshold
     )
     new_ids = new_sig.select("id")
     # canonical pairs (id_a < id_b): the greater side of any pair touching a
@@ -107,7 +106,6 @@ def start_incremental_dedup(
     bands: int | None = None,
     shingle_n: int = 3,
     jaccard_threshold: float = 0.6,
-    hash_fn: str = "xxhash64",
     max_files_per_trigger: int = 1,
     available_now: bool = True,
     batch_id_offset: int = 0,
@@ -127,13 +125,18 @@ def start_incremental_dedup(
     its dynamic-overwrite would clobber the partitions the RETIRED
     checkpoint already wrote (tools/migrate_state_checkpoint.py passes
     ``last committed batch + 1``).
+
+    Signatures hash shingles with md5_60. Earlier versions defaulted to
+    xxhash64, so a store written by them does not match the signatures of
+    new batches: rebuild the store (and start a fresh checkpoint) before
+    resuming ingestion on it.
     """
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_id = batch_id + batch_id_offset
         sess = batch_df.sparkSession
         like = minhash_signature_table(
-            batch_df.limit(0), text_col, id_col, num_hashes, shingle_n, hash_fn
+            batch_df.limit(0), text_col, id_col, num_hashes, shingle_n
         )
         base_sig = _load_signature_store(sess, store_path, like)
         survivors, survivor_sig = incremental_dedup_batch(
@@ -145,7 +148,6 @@ def start_incremental_dedup(
             bands,
             shingle_n,
             jaccard_threshold,
-            hash_fn,
         )
         (
             survivors.withColumn("batch_id", F.lit(int(batch_id)))

@@ -74,7 +74,6 @@ def start_incremental_classifier_training(
     label_col: str = "label",
     text_col: str = "text",
     id_col: str = "doc_id",
-    hash_fn: str = "md5_60",
     fit_bias: bool = False,
     l2_num: int = 0,
     l2_den: int = 1,
@@ -118,7 +117,6 @@ def start_incremental_classifier_training(
             label_col=label_col,
             text_col=text_col,
             id_col=id_col,
-            hash_fn=hash_fn,
             fit_bias=fit_bias,
             l2_num=l2_num,
             l2_den=l2_den,

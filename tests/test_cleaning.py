@@ -168,3 +168,28 @@ def test_split_sentences_udtf_edges(spark):
         (4, 1): "!",
         (4, 2): "x.",
     }
+
+
+def test_dedup_winner_independent_of_input_order(spark):
+    # changed-price duplicates of one link: the default first-wins order
+    # (bronze columns, then file_name) picks the same survivor whichever
+    # row arrives first
+    rows = [
+        ("Prodej bytu 2+kk", "Sokolovska, Praha 8", "43 m2", "2+kk", "5 600 000 Kc", "/d/1"),
+        ("Prodej bytu 2+kk", "Sokolovska, Praha 8", "43 m2", "2+kk", "5 500 000 Kc", "/d/1"),
+        ("Prodej bytu 2+kk", "Sokolovska, Praha 8", "45 m2", "2+kk", "5 500 000 Kc", "/d/1"),
+    ]
+
+    def silver(ordered):
+        bronze = spark.createDataFrame(ordered, PROPERTIES_RAW).coalesce(1)
+        out = clean_properties(
+            bronze,
+            file_name_col=F.lit("raw_properties_x.csv"),
+            dump_ts=F.to_timestamp(F.lit("2026-01-01 00:00:00")),
+        )
+        return [tuple(r) for r in out.collect()]
+
+    first = silver(rows)
+    assert len(first) == 1
+    assert silver(rows[::-1]) == first
+    assert silver(rows[1:] + rows[:1]) == first

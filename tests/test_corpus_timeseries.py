@@ -307,7 +307,7 @@ def test_bigram_coverage_discriminates_fluent_from_gibberish(spark):
     assert out[0].n_bigrams == len(common.split()) - 1
 
 
-def test_remove_frequent_lines_strategies_agree_and_preserve_order(spark):
+def test_remove_frequent_lines_preserves_order(spark):
     from real_estate_project1_etl_spark.operators.corpus import (
         remove_frequent_lines,
     )
@@ -321,19 +321,13 @@ def test_remove_frequent_lines_strategies_agree_and_preserve_order(spark):
         for i in range(8)
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    inline = remove_frequent_lines(df, min_df=3).orderBy("doc_id").collect()
-    join = (
-        remove_frequent_lines(df, min_df=3, strategy="join")
-        .orderBy("doc_id")
-        .collect()
-    )
-    assert inline == join
-    r0 = inline[0]
+    out = remove_frequent_lines(df, min_df=3).orderBy("doc_id").collect()
+    r0 = out[0]
     # both frequent lines removed, body order preserved
     assert r0["clean_text"] == "body 0 alpha\nbody 0 beta"
     assert r0["n_kept"] == 2 and r0["n_removed"] == 2
     # odd docs never had the banner
-    assert inline[1]["n_removed"] == 1
+    assert out[1]["n_removed"] == 1
 
 
 def test_remove_frequent_lines_all_boilerplate_doc_kept_empty(spark):

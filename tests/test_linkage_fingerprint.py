@@ -330,12 +330,12 @@ def test_gram_builders_match_legacy_unbound_construction(spark):
     # This pins the NEW builders to the legacy construction value-exactly
     # on the edge battery: NULL text, empty, shorter-than-n, whitespace
     # runs, and a long repetitive doc.
+    from real_estate_project1_etl_spark.functions.columns import md5_60
     from real_estate_project1_etl_spark.functions.text import (
         collapse_whitespace,
     )
     from real_estate_project1_etl_spark.operators.dedup import (
         char_ngrams,
-        shingle_hash_expr,
         word_shingles,
     )
     from real_estate_project1_etl_spark.operators.fingerprint import (
@@ -376,7 +376,7 @@ def test_gram_builders_match_legacy_unbound_construction(spark):
             ),
             lambda i: F.concat_ws(" ", F.slice(w, i, k)),
         )
-        return F.transform(grams, lambda g: shingle_hash_expr(g, "md5_60"))
+        return F.transform(grams, md5_60)
 
     def legacy_winnow(hashes, w):
         n_win = F.greatest(F.size(hashes) - (w - 1), F.lit(1))

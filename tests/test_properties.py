@@ -134,9 +134,10 @@ def test_region_expr_range(spark):
 def test_minhash_signature_matches_python_model(spark):
     # The universal-hash fold is the subtlest native-expression code in the
     # repo (NOTES: HOF lambda arg-2 is the array INDEX — a silent-wrong
-    # trap). Pin it against a pure-python model: base shingle hashes come
-    # from the same JVM xxhash64; the k permutations + running min are
+    # trap). Pin it against a pure-python model: base shingle hashes are
+    # md5_60 recomputed with hashlib; the k permutations + running min are
     # recomputed in python with explicit int64 wraparound.
+    import hashlib
     import random
 
     from pyspark.sql import functions as F
@@ -162,14 +163,8 @@ def test_minhash_signature_matches_python_model(spark):
     }
 
     base = {
-        r.id: [
-            row.h
-            for row in df.filter(F.col("id") == r.id)
-            .select(F.explode("sh").alias("s"))
-            .select(F.xxhash64("s").alias("h"))
-            .collect()
-        ]
-        for r in df.select("id").collect()
+        doc_id: [int(hashlib.md5(s.encode()).hexdigest()[:15], 16) for s in sh]
+        for doc_id, sh in docs
     }
     av, bv = _perm_constants(k)
 

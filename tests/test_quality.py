@@ -598,7 +598,7 @@ def test_hashed_linear_classifier_hand_computed(spark):
     from real_estate_project1_etl_spark.operators.quality import (
         hashed_linear_classifier,
     )
-    from real_estate_project1_etl_spark.operators.sketch import md5_60
+    from real_estate_project1_etl_spark.functions.columns import md5_60
 
     docs = spark.createDataFrame(
         [(0, "good good text"), (1, "bad stuff"), (2, "")],
@@ -906,36 +906,6 @@ def test_rrf_ensemble_approx_tracks_exact(spark):
     dbl = df.withColumn("s1", F.col("s1") / 3.0)
     with _pytest.raises(TypeError, match="integer-typed"):
         rrf_ensemble_approx(dbl, "doc_id", ["s1", "s2"])
-
-
-def test_train_hashed_classifier_xxhash64_path(spark):
-    # the production-hash path must train AND score consistently (same
-    # hash_fn on both sides) and still separate planted classes
-    import random
-
-    from real_estate_project1_etl_spark.operators.quality import (
-        hashed_linear_classifier,
-        train_hashed_classifier,
-    )
-
-    rng = random.Random(3)
-    fluent = [f"good{i}" for i in range(20)]
-    gib = [f"zxq{i}" for i in range(20)]
-    rows = [
-        (i, " ".join(rng.choice(fluent if i % 2 == 0 else gib)
-                     for _ in range(30)), 1 if i % 2 == 0 else 0)
-        for i in range(60)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, label int")
-    w = train_hashed_classifier(
-        docs, dim=256, n_iters=6, lr_den=32, hash_fn="xxhash64"
-    )
-    scored = hashed_linear_classifier(
-        docs, w, dim=256, threshold_milli=0, hash_fn="xxhash64"
-    )
-    got = {r["doc_id"]: r["kept"] for r in scored.collect()}
-    acc = sum(got[i] == (i % 2 == 0) for i in range(60)) / 60
-    assert acc >= 0.95, acc
 
 
 def _ref_gopher(texts, top_ns=(2, 3, 4), dup_ns=(5, 6, 7, 8, 9, 10)):

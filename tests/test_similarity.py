@@ -441,9 +441,7 @@ def test_leakage_safe_split_no_pair_straddles(spark, sf_dir):
         for r in entry_mod.queries()["leakage_safe_split"](spark, sf_dir).collect()
     }
     docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_near_duplicates(
-        docs, "text", "doc_id", round_digits=None, hash_fn="md5_60"
-    ).collect()
+    pairs = minhash_near_duplicates(docs, "text", "doc_id").collect()
     assert pairs, "expected planted near-dup pairs in testdata"
     for p in pairs:
         assert split[p.id_a] == split[p.id_b], (p.id_a, p.id_b)

@@ -151,7 +151,7 @@ def test_kmv_partial_sketches_merge_exactly(spark):
     d_row = direct.collect()[0]
 
     # per-day partial sketches: retain each day's bottom-48 hashes
-    from real_estate_project1_etl_spark.operators.sketch import md5_60
+    from real_estate_project1_etl_spark.functions.columns import md5_60
     from pyspark.sql import Window
 
     h = df.select("day", md5_60("v").alias("h")).distinct()

@@ -88,22 +88,6 @@ def test_spans_partition_independent(spark):
     assert base == rep and len(base) == 12
 
 
-def test_spans_hash_fn_invariant(spark):
-    # spans depend only on gram equality: xxhash64 (production, 8-byte
-    # key) and md5 (oracle mirror) must produce identical output
-    shared = "HASH-INVARIANT-SHARED-CONTENT"
-    docs = [(i, _filler(i, 20) + shared + _filler(i + 13, 13)) for i in range(6)]
-    df = spark.createDataFrame(docs, "doc_id int, text string")
-    xx = set(map(tuple, repeated_kgram_spans(df, "text", "doc_id", k=K).collect()))
-    md = set(
-        map(
-            tuple,
-            repeated_kgram_spans(df, "text", "doc_id", k=K, hash_fn="md5").collect(),
-        )
-    )
-    assert xx == md and len(xx) == 6
-
-
 def test_interval_concurrency_hand_checked(spark):
     iv = spark.createDataFrame(
         [("2020-01-01", "2020-01-03"), ("2020-01-02", "2020-01-05")],

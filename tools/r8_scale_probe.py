@@ -3,8 +3,8 @@
 
 Synthesizes corpora well past the grading scales and measures:
 
-1. ``corpus.remove_frequent_lines`` — inline vs join strategy at ~4M
-   lines / 200k docs with planted boilerplate (50 hot lines).
+1. ``corpus.remove_frequent_lines`` at ~4M lines / 200k docs with
+   planted boilerplate (50 hot lines).
 2. ``quality.temperature_sample`` — 20M rows across 12 skewed sources.
 3. ``textstats.bpe_segment`` — merge-fold throughput over 200k docs.
 
@@ -55,17 +55,16 @@ def main() -> None:
         remove_frequent_lines,
     )
 
-    for strategy in ("inline", "join"):
-        t0 = time.time()
-        out = remove_frequent_lines(corpus, min_df=1000, strategy=strategy)
-        agg = out.agg(
-            F.count(F.lit(1)), F.sum("n_removed"), F.sum("n_kept")
-        ).collect()[0]
-        print(
-            f"remove_frequent_lines[{strategy}] n_docs={n_docs} "
-            f"lines={n_docs*20} wall={time.time()-t0:.1f}s "
-            f"docs={agg[0]} removed={agg[1]} kept={agg[2]}"
-        )
+    t0 = time.time()
+    out = remove_frequent_lines(corpus, min_df=1000)
+    agg = out.agg(
+        F.count(F.lit(1)), F.sum("n_removed"), F.sum("n_kept")
+    ).collect()[0]
+    print(
+        f"remove_frequent_lines n_docs={n_docs} "
+        f"lines={n_docs*20} wall={time.time()-t0:.1f}s "
+        f"docs={agg[0]} removed={agg[1]} kept={agg[2]}"
+    )
 
     # --- BPE segmentation throughput ----------------------------------
     from real_estate_project1_etl_spark.operators.textstats import (
